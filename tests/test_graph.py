@@ -9,6 +9,7 @@ import math
 
 from twitter_flink_spark.operators.graph import (
     connected_components,
+    connected_components_adaptive,
     connected_components_star,
 )
 
@@ -208,3 +209,25 @@ def test_ledger_adaptive_cc_switches_to_star_past_threshold(spark):
     )
     assert used == [False, True]
     assert small == big == _labels(connected_components(pairs))
+
+
+def test_adaptive_cc_same_schema_both_sides_of_threshold(spark):
+    """The driver union-find path (pairs <= threshold) and the star path
+    must agree on output types, not just labels, for non-long ids: int
+    ids stay int and string ids stay strings on both sides."""
+    cases = {
+        "doc_a int, doc_b int": [(1, 2), (2, 3), (5, 6), (7, 7)],
+        "doc_a string, doc_b string": [("b", "a"), ("c", "b"), ("x", "y")],
+    }
+    for ddl, rows in cases.items():
+        pairs = spark.createDataFrame(rows, ddl)
+        paths = []
+        small = connected_components_adaptive(
+            pairs, len(rows), threshold=len(rows), used_star=paths
+        )
+        star = connected_components_adaptive(
+            pairs, len(rows), threshold=0, used_star=paths
+        )
+        assert paths == [False, True]
+        assert small.schema == star.schema, ddl
+        assert _labels(small) == _labels(star), ddl

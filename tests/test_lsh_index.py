@@ -568,3 +568,32 @@ def test_band_parallel_spreads_single_partition_losslessly(spark):
     # an input already at >= default parallelism passes through untouched
     wide = docs.repartition(n, F.col("doc_id"))
     assert _band_parallel(wide) is wide
+
+
+def test_observed_count_only_forgives_the_null_metrics_row(spark):
+    """`_observed_count` maps exactly the documented null-metrics-row
+    failure (AQE pruned the CollectMetrics node: zero rows flowed) to 0;
+    any other failure must surface instead of reading as an empty batch."""
+    import pytest
+
+    from twitter_flink_spark.operators.dedup import _observed_count
+
+    utils = getattr(spark._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+
+    class NullRow:  # the JVM row conversion handed a null metrics row
+        @property
+        def get(self):
+            return utils.toPyRow(None)
+
+    class Broken:
+        @property
+        def get(self):
+            raise RuntimeError("observation failed")
+
+    from pyspark.sql import Observation
+
+    assert _observed_count(NullRow()) == 0
+    with pytest.raises(RuntimeError):
+        _observed_count(Broken())
+    with pytest.raises(Exception):
+        _observed_count(Observation())  # never attached to a plan

@@ -717,3 +717,31 @@ def test_sketch_driven_strategy_hints_engaged(spark):
     assert "BroadcastHashJoin" in plan
     assert "ShuffledHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_driver_built_frames_plan_as_local_table_scan(spark):
+    """Driver-built frames must be JVM local relations (`LocalTableScan`),
+    never a pickled Python RDD (`Scan ExistingRDD`) whose every job starts
+    Python workers: pinned on `local_frame` itself and on the MV point
+    lookup, whose key frame is broadcast into the bucket read."""
+    from twitter_flink_spark.session import local_frame
+    from twitter_flink_spark.streaming.pipeline import IncrementalMV
+
+    mv = IncrementalMV(spark, key_col="user_id", n_buckets=4)
+    mv.merge_batch(
+        local_frame(
+            spark,
+            [(i, float(i)) for i in range(20)],
+            "user_id long, value double",
+        ),
+        0,
+    )
+    frames = {
+        "lookup": mv.lookup([3, 7]),
+        "rows": local_frame(spark, [(1, "a")], "k long, s string"),
+        "empty": local_frame(spark, [], "k long"),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, name
+        assert "ExistingRDD" not in plan, name

@@ -582,3 +582,31 @@ def test_ivf_refit_on_imbalance_fires_and_noops(spark, tmp_path):
     assert imb2 < imb1  # the refit genuinely rebalanced
     r3 = ivf_refit_on_imbalance(spark, idx, allv, threshold=thr)
     assert r3["fired"] is False and abs(r3["imbalance"] - imb2) < 1e-9
+
+
+def test_ivf_assign_append_survives_empty_first_batch(spark, tmp_path):
+    """A zero-row FIRST micro-batch may leave the assignment dir holding
+    only `_SUCCESS`; the next batch must still anti-join, assign and
+    append instead of failing schema inference on the parquet-less dir."""
+    import os
+
+    from twitter_flink_spark.operators.ivf import has_parquet, ivf_assign_append
+    from twitter_flink_spark.session import local_frame
+
+    cents = local_frame(
+        spark, [(0, [0.0, 0.0]), (1, [1.0, 1.0])], "cid long, cent array<double>"
+    )
+    assign_dir = str(tmp_path / "_assign")
+    schema = "vec_id long, e array<double>"
+    assert ivf_assign_append(local_frame(spark, [], schema), cents, assign_dir) == 0
+    assert os.path.isdir(assign_dir) and not has_parquet(assign_dir)
+    # files Spark never reads (a crashed writer's _temporary) do not count
+    leftover = tmp_path / "crashed" / "_temporary" / "0"
+    leftover.mkdir(parents=True)
+    (leftover / "part-0.parquet").touch()
+    assert not has_parquet(str(tmp_path / "crashed"))
+    vecs = local_frame(spark, [(1, [0.1, 0.0]), (2, [0.9, 1.0])], schema)
+    assert ivf_assign_append(vecs, cents, assign_dir) == 2
+    assert ivf_assign_append(vecs, cents, assign_dir) == 0  # redelivery
+    got = sorted(tuple(r) for r in spark.read.parquet(assign_dir).collect())
+    assert got == [(1, 0), (2, 1)]

@@ -22,6 +22,10 @@ corpus never moves); the update aggregates the assigned rows directly
 into per-dimension DECIMAL sums — exactly one exchange per round, k x dim
 partials per task. The iteration scaffolding (localCheckpoint + block
 freeing) is shared with `operators/graph.py`.
+
+The fitted codebook and the `_meta` manifest are driver-built frames
+(`session.local_frame`, a JVM local relation), so persisting one is a
+plain one-file write with no Python worker behind it.
 """
 
 from __future__ import annotations
@@ -34,34 +38,10 @@ from twitter_flink_spark.operators.graph import (
     _unpersist_ids,
 )
 from twitter_flink_spark.operators.similarity import dot
+from twitter_flink_spark.session import local_frame
 
 #: decimal scale for centroid component accumulation
 _COMP_SCALE = 7
-
-
-def checkpointed_write(
-    df: DataFrame, path: str, mode: str = "overwrite"
-) -> None:
-    """Parquet-write a DRIVER-BUILT frame (`createDataFrame`-backed — a
-    fitted codebook, a `_meta` manifest) through a localCheckpoint.
-
-    With Arrow enabled, a file-write job over a Python-local relation
-    re-serves the Arrow batches from the driver and stalls ~4-5 s per
-    write REGARDLESS of row count (measured r16: a 4-row centroid write
-    took 4.5-6.5 s; the identical frame localCheckpointed first, 0.4-
-    0.8 s — and half of the r15 streaming-IVF regression was exactly
-    this stall inside the centroid freeze). Materializing to JVM blocks
-    first turns the write into a block read; the blocks are freed as
-    soon as the write commits. Only worth it for driver-built frames —
-    scan-backed frames never pay the stall."""
-    sc = df.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
-    cp = df.localCheckpoint()
-    ids = _persistent_rdd_ids(sc) - before
-    try:
-        cp.coalesce(1).write.mode(mode).parquet(path)
-    finally:
-        _unpersist_ids(sc, ids)
 
 
 def _pack_rows(spark, rows, g: list, fields: dict) -> DataFrame:
@@ -87,8 +67,8 @@ def _pack_rows(spark, rows, g: list, fields: dict) -> DataFrame:
             )
         ]
     )
-    return spark.createDataFrame(
-        [(*key, cands) for key, cands in groups.items()], schema
+    return local_frame(
+        spark, [(*key, cands) for key, cands in groups.items()], schema
     )
 
 
@@ -301,7 +281,7 @@ def kmeans_fit(
         )
         rows = _centroid_means(members, g).collect()
     _unpersist_ids(sc, v_ids)
-    return spark.createDataFrame(rows, cent_schema)
+    return local_frame(spark, rows, cent_schema)
 
 
 # -- drift-triggered refit (the incremental IVF index's weekly fit) ---------
@@ -314,7 +294,8 @@ def ivf_meta_df(
     mean assignment distance (the drift baseline) plus the fit
     parameters, riding the index like the Bloom manifest's m/k so a
     refit can never re-fit with skewed settings."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(float(fit_mean_dist), int(k), int(iters))],
         "fit_mean_dist double, k int, iters int",
     )
@@ -442,14 +423,16 @@ def _ivf_full_refit(
     ).select("cid", "cent")
     for t in (tmp_c, tmp_a, tmp_m):
         shutil.rmtree(t, ignore_errors=True)
-    checkpointed_write(new_cents, tmp_c)
+    new_cents.coalesce(1).write.mode("overwrite").parquet(tmp_c)
     disk_cents = spark.read.parquet(tmp_c)  # freeze doubles on disk
     new_assign = assign_clusters(v, disk_cents, id_col=id_col)
     new_assign.write.mode("overwrite").partitionBy("cid").parquet(tmp_a)
     new_baseline = assigned_mean_dist(
         v, disk_cents, spark.read.parquet(tmp_a), id_col=id_col
     )
-    checkpointed_write(ivf_meta_df(spark, new_baseline, k, iters), tmp_m)
+    ivf_meta_df(spark, new_baseline, k, iters).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(tmp_m)
     _swap_dirs(tmp_a, assign_dir)
     _swap_dirs(tmp_c, cents_dir)
     _swap_dirs(tmp_m, meta_dir)

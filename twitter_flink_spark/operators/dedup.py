@@ -19,12 +19,16 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 MINHASH_K = 16  #: number of hash functions (signature length)
 LSH_BANDS = 8  #: bands of r = K/BANDS rows each; catch-prob at J=0.8 ≈ 0.9997
+
+_log = logging.getLogger(__name__)
 
 
 def doc_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -527,11 +531,19 @@ def _observed_count(obs) -> int:
     the CollectMetrics node never executes and ``obs.get`` raises from
     the JVM (null metrics row in PythonSQLUtils.toPyRow) — which happens
     exactly when zero rows flowed through the write. A present metrics
-    row is always authoritative."""
+    row is always authoritative. Any other failure is logged and
+    re-raised: read as zero, it would pass for a redelivery no-op and
+    silently skip the caller's follow-up appends."""
+    from py4j.protocol import Py4JJavaError
+
     try:
         return int(obs.get["n"] or 0)
-    except Exception:
-        return 0
+    except Exception as e:
+        # the null row fails inside the JVM's row conversion
+        if isinstance(e, Py4JJavaError) and "PythonSQLUtils.toPyRow" in str(e):
+            return 0
+        _log.exception("observed count failed")
+        raise
 
 
 def _move_parquet_into(

@@ -21,7 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
+
+from twitter_flink_spark.session import local_frame
 
 
 def _persistent_rdd_ids(sc) -> set[int]:
@@ -170,10 +173,17 @@ def connected_components_adaptive(
         return connected_components_star(pairs, a_col=a_col, b_col=b_col)
     if used_star is not None:
         used_star.append(False)
-    spark = pairs.sparkSession
-    parent: dict[int, int] = {}
+    # typed like the star path's output: the endpoints' widened type
+    node = pairs.select(a_col).unionAll(pairs.select(b_col)).schema[0]
+    schema = StructType(
+        [
+            StructField(c, node.dataType, node.nullable)
+            for c in ("doc_id", "cluster_id")
+        ]
+    )
+    parent: dict = {}
 
-    def find(x: int) -> int:
+    def find(x):
         root = x
         while parent[root] != root:
             root = parent[root]
@@ -182,7 +192,7 @@ def connected_components_adaptive(
         return root
 
     for r in pairs.select(a_col, b_col).collect():
-        a, b = int(r[a_col]), int(r[b_col])
+        a, b = r[a_col], r[b_col]
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -193,7 +203,7 @@ def connected_components_adaptive(
             else:
                 parent[ra] = rb
     rows = sorted((n, find(n)) for n in parent)
-    return spark.createDataFrame(rows, "doc_id long, cluster_id long")
+    return local_frame(pairs.sparkSession, rows, schema)
 
 
 def connected_components_star(

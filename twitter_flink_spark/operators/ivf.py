@@ -1,4 +1,6 @@
-"""IVF index delete lifecycle: tombstones + CELL-LOCAL compaction.
+"""IVF index maintenance: the incremental assigner's append
+(`ivf_assign_append`) and the delete lifecycle — tombstones + CELL-LOCAL
+compaction.
 
 The assignment table of the incremental IVF index
 (`queries/similarity.py::_ensure_ivf_inc_index`) is partitioned by cid —
@@ -28,6 +30,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.session import local_frame
+
 TOMBS_DIR = "_tombs"
 
 
@@ -35,17 +39,49 @@ def _tombs_path(index_dir: str) -> str:
     return os.path.join(index_dir, TOMBS_DIR)
 
 
+def has_parquet(path: str) -> bool:
+    """True when ``path`` holds a parquet file Spark would read (any
+    depth, outside ``_``/``.`` dirs such as a crashed write's
+    ``_temporary``): a zero-row write can leave a dir holding only
+    ``_SUCCESS``, and Spark cannot infer a schema from that."""
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
+
+
 def ivf_tombstones(spark: SparkSession, index_dir: str) -> DataFrame:
     """The current tombstone set (empty frame if none). Robust to a
     ``_tombs`` dir holding no parquet files yet (a delete batch that
     turned out to be fully redelivered appends nothing but may have
-    created the dir) — Spark cannot infer a schema from an empty dir."""
+    created the dir)."""
     p = _tombs_path(index_dir)
-    if os.path.isdir(p) and any(
-        f.endswith(".parquet") for f in os.listdir(p)
-    ):
+    if has_parquet(p):
         return spark.read.parquet(p).select("vec_id")
-    return spark.createDataFrame([], "vec_id long")
+    return local_frame(spark, [], "vec_id long")
+
+
+def ivf_assign_append(
+    vecs: DataFrame, cents: DataFrame, assign_dir: str
+) -> int:
+    """Append the not-yet-indexed rows of ``vecs`` (vec_id, e), assigned
+    to their nearest centroid, to the cid-partitioned ``assign_dir``.
+    Returns the count, OBSERVED during the write (one job per batch);
+    redelivered rows anti-join away, so a replay appends nothing."""
+    from pyspark.sql import Observation
+
+    from twitter_flink_spark.operators.clustering import assign_clusters
+    from twitter_flink_spark.operators.dedup import _observed_count
+
+    if has_parquet(assign_dir):
+        known = vecs.sparkSession.read.parquet(assign_dir).select("vec_id")
+        vecs = vecs.join(known, "vec_id", "left_anti")
+    obs = Observation()
+    assign_clusters(vecs, cents).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).write.mode("append").partitionBy("cid").parquet(assign_dir)
+    return _observed_count(obs)
 
 
 def ivf_index_delete(

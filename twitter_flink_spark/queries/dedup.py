@@ -9,6 +9,7 @@ from pyspark.storagelevel import StorageLevel
 
 from twitter_flink_spark.operators.dedup import MINHASH_K, simhash16
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.sources.tables import load_table, spread
 
@@ -167,8 +168,6 @@ def _staged_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     is two broadcast joins plus `array_intersect`, never a scan (or
     shuffle) of the exploded shingle table. A pure deterministic
     function of the staged shingles."""
-    import os
-
     from twitter_flink_spark.sources.staging import stage_once
 
     def _build(p: str) -> None:
@@ -2002,7 +2001,8 @@ def dedup_cluster_size_histogram(
         .join(F.broadcast(cl.select("doc_id")), "doc_id", "left_anti")
         .count()
     )
-    singles = spark.createDataFrame(
+    singles = local_frame(
+        spark,
         [(1, n_single, n_single, 0)],
         "cluster_size long, n_clusters long, n_docs long, "
         "docs_removed long",
@@ -2048,8 +2048,6 @@ def dedup_lsh_index_delete_compact(
     one bounded anti-join per side, compact is one linear rewrite on
     the LSM cadence (amortized over many deletes), and nothing ever
     re-signs the surviving corpus."""
-    import os
-
     from twitter_flink_spark.operators.dedup import (
         TOMB_BAND,
         jaccard_verify_sets,

@@ -10,7 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.operators.expectations import ROUTE_COL, Rule, route
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.sources.tables import load_table
 
@@ -645,19 +647,28 @@ def expectations_quarantine_routing(
     recomputing each count independently; `persisted_matches` pins that
     the rows actually ON DISK per route equal the observed ledger —
     enforcement happened, not just measurement."""
-    import tempfile
-
-    from twitter_flink_spark.operators.expectations import ROUTE_COL, Rule, route
-
-    rules = [
-        Rule("value_under_100", "value >= 100", "quarantine"),
-        Rule("no_error_type", "event_type <> 'error'", "quarantine"),
-        Rule("value_at_least_1", "value >= 1", "warn"),
-        Rule("user_present", "user_id IS NOT NULL", "drop"),
-    ]
     e = load_table(spark, sf_dir, "events")
     dest = scratch_dir("expect") + "/routed"
-    ledger, _ = route(e, rules, dest)
+    ledger, _ = route(e, GATE_RULES, dest)
+    return gate_ledger_frame(spark, ledger, dest)
+
+
+#: the expectations gate's rules — batch query and streaming twin
+GATE_RULES = [
+    Rule("value_under_100", "value >= 100", "quarantine"),
+    Rule("no_error_type", "event_type <> 'error'", "quarantine"),
+    Rule("value_at_least_1", "value >= 1", "warn"),
+    Rule("user_present", "user_id IS NOT NULL", "drop"),
+]
+
+
+def gate_ledger_frame(
+    spark: SparkSession, ledger, dest: str, ok: bool = True
+) -> DataFrame:
+    """(rule, action, n, persisted_matches) from a `GATE_RULES` routing
+    ledger: per-rule violation counts plus per-route row counts, with
+    `persisted_matches` pinning that the rows ON DISK per route under
+    ``dest`` equal the ledger's route counts (and ``ok``)."""
     on_disk = {
         r[ROUTE_COL]: r["n"]
         for r in spark.read.parquet(dest)
@@ -665,22 +676,19 @@ def expectations_quarantine_routing(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()  # <= 3 rows
     }
-    matches = all(
+    matches = ok and all(
         ledger[f"route_{v}"] == on_disk.get(v, 0)
         for v in ("good", "quarantined", "dropped")
     )
-    by_action = {r.name: r.action for r in rules}
+    by_action = {r.name: r.action for r in GATE_RULES}
     rows = [
-        (
-            k.removeprefix("rule_"),
-            by_action[k.removeprefix("rule_")],
-            ledger[k],
-        )
-        for k in ledger
+        (k.removeprefix("rule_"), by_action[k.removeprefix("rule_")], n)
+        for k, n in ledger.items()
         if k.startswith("rule_")
-    ] + [(k, "route", ledger[k]) for k in ledger if k.startswith("route_")]
-    return spark.createDataFrame(
-        [(r, a, n, bool(matches)) for r, a, n in rows],
+    ] + [(k, "route", n) for k, n in ledger.items() if k.startswith("route_")]
+    return local_frame(
+        spark,
+        [(r, a, int(n), bool(matches)) for r, a, n in rows],
         "rule string, action string, n long, persisted_matches boolean",
     )
 

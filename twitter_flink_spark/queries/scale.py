@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from twitter_flink_spark.operators.bucketing import read_bucketed, write_bucketed
 from twitter_flink_spark.operators.joins import salted_equi_join
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table
 
 
@@ -480,8 +481,8 @@ def mixture_resample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mixture spec."""
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    shares = spark.createDataFrame(
-        list(_MIX_SHARES.items()), "lang string, share double"
+    shares = local_frame(
+        spark, list(_MIX_SHARES.items()), "lang string, share double"
     )
     tcap = (
         counts.join(F.broadcast(shares), "lang")
@@ -757,7 +758,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     before, after = _files_per_part(staged), _files_per_part(compacted)
-    stats = spark.createDataFrame(
+    stats = local_frame(
+        spark,
         [
             (et, before.get(et, 0), after.get(et, 0))
             for et in sorted(before)
@@ -791,9 +793,8 @@ _TYPE_PART_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _ensure_type_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """events written partitionBy(event_type), once per (app, sf)."""
-    import os
-
+    """events written partitionBy(event_type), with the `_DPP_TIERS`
+    dimension table at ``<dest>-tiers``, once per (app, sf)."""
     from twitter_flink_spark.sources.files import scratch_dir
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -802,6 +803,9 @@ def _ensure_type_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
         load_table(spark, sf_dir, "events").write.partitionBy(
             "event_type"
         ).mode("overwrite").parquet(dest)
+        local_frame(
+            spark, _DPP_TIERS, "event_type string, tier string"
+        ).write.mode("overwrite").parquet(dest + "-tiers")
         _TYPE_PART_CACHE[key] = dest
     return _TYPE_PART_CACHE[key]
 
@@ -841,11 +845,13 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     date/tenant-partitioned fact affordable: the filter lives on the
     dimension, but the fact scan skips whole partitions at run time —
     no manual predicate copying, no full scan. The dim broadcast is
-    reused for both the pruning subquery and the join itself."""
-    fact = spark.read.parquet(
-        _ensure_type_partitioned_events(spark, sf_dir)
-    )
-    dim = spark.createDataFrame(_DPP_TIERS, "event_type string, tier string")
+    reused for both the pruning subquery and the join itself. The dim
+    is a parquet TABLE, as in a warehouse: over a driver-built local
+    relation the tier filter would fold into the relation at plan
+    time, leaving DPP no selective predicate to prune with."""
+    staged = _ensure_type_partitioned_events(spark, sf_dir)
+    fact = spark.read.parquet(staged)
+    dim = spark.read.parquet(staged + "-tiers")
     return (
         fact.join(F.broadcast(dim), "event_type")
         .where(F.col("tier") == "high")
@@ -1210,8 +1216,8 @@ def compact_target_file_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, compacted, "event_type"
         ).items()
     ]
-    obs_df = spark.createDataFrame(
-        observed, "event_type string, files_after int"
+    obs_df = local_frame(
+        spark, observed, "event_type string, files_after int"
     )
     back = spark.read.parquet(compacted)
     per_file = back.groupBy(
@@ -1996,7 +2002,7 @@ def era_compaction_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         (day, incremental_ok and evolved)
         for day, evolved in sorted(serving.items())
     ]
-    flags_df = spark.createDataFrame(flags, "day string, evolved boolean")
+    flags_df = local_frame(spark, flags, "day string, evolved boolean")
     r0 = spark.read.parquet(mig).where(F.col("event_type") == "purchase")
     r1 = spark.read.parquet(era1).where(F.col("event_type") == "purchase")
     cols = ["day", "value"]
@@ -2506,10 +2512,6 @@ def _ensure_two_era_bloom_orders(
     """orders split at the key midpoint into two 8-file appends — era 1
     Bloom-indexed, era 2 arriving after the first manifest commit.
     Returns (dest, freshly_built)."""
-    import os
-    import shutil
-    import tempfile
-
     from twitter_flink_spark.operators import skipping
     from twitter_flink_spark.sources.staging import stage_once
 
@@ -2641,7 +2643,8 @@ def metadata_count_time_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt, scanned, total = skipping.count_between(spark, dest, "ts", lo, hi)
     candidates, _total = skipping.select_files(spark, dest, [("ts", lo, hi)])
     n_intersecting = len(candidates)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 cnt,
@@ -2690,7 +2693,8 @@ def metadata_minmax_time_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, dest, "ts", lo, hi
     )
     candidates, _total = skipping.select_files(spark, dest, [("ts", lo, hi)])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(mn, mx, scanned < len(candidates), 0 < scanned < total)],
         "min_ts timestamp, max_ts timestamp, used_metadata boolean,"
         " partial_scan_subset boolean",
@@ -2817,7 +2821,8 @@ def twolevel_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, _ft, _pr, _pt = skipping.select_files_two_level(
         spark, dest, "ts", lo, hi
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 cnt,
@@ -3158,8 +3163,6 @@ def filebloom_vacuum_after_compact(
     post-vacuum rows == live files); the max-orderkey point read serves
     from the vacuumed index (`bloom_pruned` pins it reads a strict
     subset of files) and the oracle's exact row proves no loss."""
-    import os
-
     from twitter_flink_spark.operators import skipping
 
     dest, n_new, n_dead = _ensure_bloom_vacuumed_layout(spark, sf_dir)
@@ -3294,7 +3297,8 @@ def twolevel_metadata_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, _ft, _pr, _pt = skipping.select_files_two_level(
         spark, dest, "ts", lo, hi
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 mn,
@@ -4476,7 +4480,8 @@ def exact_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             cum += here
         passes += 1
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(median, n, passes >= 1)],
         "median_cents long, n_rows long, narrowed_not_sorted boolean",
     )
@@ -4544,7 +4549,8 @@ def _grouped_exact_select(
             del state[g]
     passes = 0
     while state:
-        bounds = spark.createDataFrame(
+        bounds = local_frame(
+            spark,
             [(g, lo, hi) for g, (lo, hi, _r) in state.items()],
             "g string, lo long, hi long",
         )
@@ -4634,7 +4640,8 @@ def exact_median_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     found, n_rows, passes = _grouped_exact_select(
         spark, s, lambda n: (n + 1) // 2
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(g, found[g], n_rows[g], passes >= 1) for g in sorted(found)],
         "event_type string, median_cents long, n_rows long, "
         "narrowed_not_sorted boolean",
@@ -4676,7 +4683,8 @@ def exact_p95_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     found, n_rows, passes = _grouped_exact_select(
         spark, s, lambda n: (19 * n + 19) // 20
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(g, found[g], n_rows[g], passes >= 1) for g in sorted(found)],
         "event_type string, p95_cents long, n_rows long, "
         "narrowed_not_sorted boolean",

@@ -16,6 +16,7 @@ from twitter_flink_spark.operators.similarity import (
     topk_neighbors,
 )
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.tables import load_table
 
 #: shared by the Spark query and the generated oracle — identical literals
@@ -860,8 +861,8 @@ def _coarse_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.cid, [float(x) for x in r.cent], r.n_vecs)
             for r in cents.collect()
         ]
-    return spark.createDataFrame(
-        _KM_CACHE[key], "cid long, cent array<double>, n_vecs long"
+    return local_frame(
+        spark, _KM_CACHE[key], "cid long, cent array<double>, n_vecs long"
     )
 
 
@@ -1117,8 +1118,10 @@ def _pq_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.sub, r.cid, [float(x) for x in r.cent], r.n_vecs)
             for r in cents.collect()
         ]
-    return spark.createDataFrame(
-        _PQ_CACHE[key], "sub int, cid long, cent array<double>, n_vecs long"
+    return local_frame(
+        spark,
+        _PQ_CACHE[key],
+        "sub int, cid long, cent array<double>, n_vecs long",
     )
 
 
@@ -1412,8 +1415,8 @@ def _residual_pq_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r.sub, r.cid, [float(x) for x in r.cent])
             for r in cents.collect()
         ]
-    return spark.createDataFrame(
-        _RPQ_CACHE[key], "sub int, cid long, cent array<double>"
+    return local_frame(
+        spark, _RPQ_CACHE[key], "sub int, cid long, cent array<double>"
     )
 
 
@@ -2512,9 +2515,9 @@ def _ensure_ivf_inc_index(
 
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
-        checkpointed_write,
         kmeans_fit,
     )
+    from twitter_flink_spark.operators.ivf import ivf_assign_append
     from twitter_flink_spark.sources.staging import stage_once
     from twitter_flink_spark.sources.tables import spread
 
@@ -2532,7 +2535,9 @@ def _ensure_ivf_inc_index(
         cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
             "cid", "cent"
         )
-        checkpointed_write(cents, os.path.join(p, "_centroids"))
+        cents.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(p, "_centroids")
+        )
         disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
         assign_dir = os.path.join(p, "_assign")
         assign_clusters(vecs, disk_cents).write.mode(
@@ -2540,26 +2545,14 @@ def _ensure_ivf_inc_index(
         ).partitionBy("cid").parquet(assign_dir)
         n_corpus = spark.read.parquet(assign_dir).count()
 
-        def _update(new_vecs) -> int:
-            known = spark.read.parquet(assign_dir).select("vec_id")
-            todo = new_vecs.join(known, "vec_id", "left_anti")
-            n = todo.count()
-            if not n:
-                return 0
-            fresh = assign_clusters(todo, disk_cents)
-            # partitioned append: only the touched cell dirs grow
-            fresh.write.mode("append").partitionBy("cid").parquet(
-                assign_dir
-            )
-            return n
-
         all_vecs = spread(emb, "vec_id").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
         )
+        new_vecs = all_vecs.where(F.col("vec_id") > split)
         return {
             "n_corpus": n_corpus,
-            "n_new": _update(all_vecs.where(F.col("vec_id") > split)),
-            "n_again": _update(all_vecs),
+            "n_new": ivf_assign_append(new_vecs, disk_cents, assign_dir),
+            "n_again": ivf_assign_append(all_vecs, disk_cents, assign_dir),
         }
 
     dest, meta = stage_once("ivfinc", sf_dir, _build)
@@ -2863,6 +2856,47 @@ def _refit_vectors(emb, split: int):
     )
 
 
+def _build_drifted_ivf(spark: SparkSession, p: str, emb, split: int):
+    """Shared start of the refit fixtures, written under ``p``: corpus-half
+    fit, its assignment and `_meta` baseline, then the DRIFTED new era
+    assigned to the FROZEN centroids and appended into their cell dirs
+    (the streaming path). Returns all (drifted) vectors for the refit."""
+    import os
+
+    from twitter_flink_spark.operators.clustering import (
+        assign_clusters,
+        assigned_mean_dist,
+        ivf_meta_df,
+        kmeans_fit,
+    )
+    from twitter_flink_spark.sources.tables import spread
+
+    allv = _refit_vectors(spread(emb, "vec_id"), split)
+    corpus = allv.where(F.col("vec_id") <= split)
+    kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
+        "cid", "cent"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(p, "_centroids")
+    )
+    cents = spark.read.parquet(os.path.join(p, "_centroids"))
+    vc = corpus.select("vec_id", F.col("embedding").alias("e"))
+    assign_dir = os.path.join(p, "_assign")
+    assign_clusters(vc, cents).write.mode("overwrite").partitionBy(
+        "cid"
+    ).parquet(assign_dir)
+    baseline = assigned_mean_dist(vc, cents, spark.read.parquet(assign_dir))
+    ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(p, "_meta"))
+    newv = allv.where(F.col("vec_id") > split).select(
+        "vec_id", F.col("embedding").alias("e")
+    )
+    assign_clusters(newv, cents).write.mode("append").partitionBy(
+        "cid"
+    ).parquet(assign_dir)
+    return allv
+
+
 def _ensure_ivf_refit_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, int, dict]:
@@ -2873,18 +2907,8 @@ def _ensure_ivf_refit_index(
     full-data refit atomically cut over), the second is a pure no-op
     (post-refit ratio is exactly 1). The two outcomes ride the staged
     ledger so every process replays the builder's lifecycle."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import (
-        assign_clusters,
-        assigned_mean_dist,
-        checkpointed_write,
-        ivf_meta_df,
-        ivf_refit_on_drift,
-        kmeans_fit,
-    )
+    from twitter_flink_spark.operators.clustering import ivf_refit_on_drift
     from twitter_flink_spark.sources.staging import stage_once
-    from twitter_flink_spark.sources.tables import spread
 
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
@@ -2893,33 +2917,7 @@ def _ensure_ivf_refit_index(
     split = (int(b["mn"]) + int(b["mx"])) // 2
 
     def _build(p: str) -> dict:
-        allv = _refit_vectors(spread(emb, "vec_id"), split)
-        corpus = allv.where(F.col("vec_id") <= split)
-        cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-            "cid", "cent"
-        )
-        checkpointed_write(cents, os.path.join(p, "_centroids"))
-        disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
-        vc = corpus.select("vec_id", F.col("embedding").alias("e"))
-        assign_dir = os.path.join(p, "_assign")
-        assign_clusters(vc, disk_cents).write.mode(
-            "overwrite"
-        ).partitionBy("cid").parquet(assign_dir)
-        baseline = assigned_mean_dist(
-            vc, disk_cents, spark.read.parquet(assign_dir)
-        )
-        checkpointed_write(
-            ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS),
-            os.path.join(p, "_meta"),
-        )
-        # the streaming path: drifted arrivals assigned to the FROZEN
-        # centroids, appended into their cell dirs
-        newv = allv.where(F.col("vec_id") > split).select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-        assign_clusters(newv, disk_cents).write.mode(
-            "append"
-        ).partitionBy("cid").parquet(assign_dir)
+        allv = _build_drifted_ivf(spark, p, emb, split)
         # the weekly job, twice: fire, then clean no-op
         r1 = ivf_refit_on_drift(
             spark, p, allv, threshold=_REFIT_THRESHOLD
@@ -3027,18 +3025,8 @@ def _ensure_ivf_imbal_index(
     `_IMBAL_THRESHOLD`), then `ivf_refit_on_imbalance` run twice — the
     first fires on the occupancy statistic alone (no vector math in
     the trigger), the second is a pure no-op on the rebalanced index."""
-    import os
-
-    from twitter_flink_spark.operators.clustering import (
-        assign_clusters,
-        assigned_mean_dist,
-        checkpointed_write,
-        ivf_meta_df,
-        ivf_refit_on_imbalance,
-        kmeans_fit,
-    )
+    from twitter_flink_spark.operators.clustering import ivf_refit_on_imbalance
     from twitter_flink_spark.sources.staging import stage_once
-    from twitter_flink_spark.sources.tables import spread
 
     emb = load_table(spark, sf_dir, "embeddings")
     b = emb.agg(
@@ -3047,31 +3035,7 @@ def _ensure_ivf_imbal_index(
     split = (int(b["mn"]) + int(b["mx"])) // 2
 
     def _build(p: str) -> dict:
-        allv = _refit_vectors(spread(emb, "vec_id"), split)
-        corpus = allv.where(F.col("vec_id") <= split)
-        cents = kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-            "cid", "cent"
-        )
-        checkpointed_write(cents, os.path.join(p, "_centroids"))
-        disk_cents = spark.read.parquet(os.path.join(p, "_centroids"))
-        vc = corpus.select("vec_id", F.col("embedding").alias("e"))
-        assign_dir = os.path.join(p, "_assign")
-        assign_clusters(vc, disk_cents).write.mode(
-            "overwrite"
-        ).partitionBy("cid").parquet(assign_dir)
-        baseline = assigned_mean_dist(
-            vc, disk_cents, spark.read.parquet(assign_dir)
-        )
-        checkpointed_write(
-            ivf_meta_df(spark, baseline, _KM_K, _KM_ITERS),
-            os.path.join(p, "_meta"),
-        )
-        newv = allv.where(F.col("vec_id") > split).select(
-            "vec_id", F.col("embedding").alias("e")
-        )
-        assign_clusters(newv, disk_cents).write.mode(
-            "append"
-        ).partitionBy("cid").parquet(assign_dir)
+        allv = _build_drifted_ivf(spark, p, emb, split)
         # the maintenance job, twice: fire on skew, then clean no-op
         r1 = ivf_refit_on_imbalance(
             spark, p, allv, threshold=_IMBAL_THRESHOLD
@@ -3292,8 +3256,8 @@ def ivf_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .first()
     )  # 1-row: probe vector + its label (the filter literal)
-    probe = spark.createDataFrame(
-        [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
+    probe = local_frame(
+        spark, [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
     )
     cents = spark.read.parquet(os.path.join(dest, "_centroids"))
     cells = [
@@ -3389,8 +3353,8 @@ def ivf_filtered_ann_escalating(
         )
         .first()
     )  # 1-row: probe vector + its label (the filter literal)
-    probe = spark.createDataFrame(
-        [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
+    probe = local_frame(
+        spark, [(prow["vec_id"], prow["e"])], "vec_id long, e array<double>"
     )
     cents = spark.read.parquet(os.path.join(dest, "_centroids"))
     n_cells = cents.count()  # tiny: the codebook
@@ -3443,7 +3407,7 @@ def ivf_filtered_ann_escalating(
         n_match += _count_cell(order[nprobe - 1])
     cands = _cands(order[:nprobe])
     if cands is None:
-        cands = spark.createDataFrame([], "vec_id long, e array<double>")
+        cands = local_frame(spark, [], "vec_id long, e array<double>")
     probe_vec = probe.select(F.col("e").alias("pe"))
     scored = cands.crossJoin(F.broadcast(probe_vec)).select(
         "vec_id",
@@ -3644,7 +3608,8 @@ def ann_recall_curve_ivf_inverted(
         )
         for n in (1, 2)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         data,
         "nprobe int, n_hits long, recall_at_5 double, rbo double, "
         "curve_monotone boolean",

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_flink_spark.registry import register
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.sources.staging import scratch_dir
 from twitter_flink_spark.streaming.pipeline import (
     TopNFeedback,
@@ -455,8 +456,6 @@ def streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintenance invariant. No stream state at all: partials are map-side
     reduced per batch, the merge is one keyed outer join against the
     snapshot (a table-format MERGE INTO at scale)."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import IncrementalMV
 
     staged = _ensure_split_events(spark, sf_dir)
@@ -499,8 +498,6 @@ def streaming_statestore_introspect(
     oracle checks. The reference's equivalent state (`String[] topN`,
     `TopNHashtags.java:303`) is invisible and lost on restart; here it is
     a queryable, checkpointed table."""
-    import tempfile
-
     ckpt = scratch_dir("ssread-ck")
     src = stream_table(spark, sf_dir, "events")
     agg = src.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1050,8 +1047,6 @@ def _drained_presence_mv(spark: SparkSession, sf_dir: str):
     MV — which is the actual production shape: one incremental
     pipeline, many readers — the same session-share discipline as
     `_drained_join_ckpt`."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import PresenceMV
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -1144,8 +1139,6 @@ def streaming_topk_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id, so the served table is deterministic on both engines;
     oracle = the batch grouped count + rank, the incremental-maintenance
     invariant."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import GroupedCountMV
 
     staged = _ensure_split_events(spark, sf_dir)
@@ -1579,21 +1572,14 @@ def streaming_expectations_gate(
     directories (partition discovery over batch= and __route=) against
     the accumulated ledger, and that the run really was incremental
     (>1 batch)."""
-    import tempfile
     from collections import Counter
 
-    from twitter_flink_spark.operators.expectations import (
-        ROUTE_COL,
-        Rule,
-        route,
+    from twitter_flink_spark.operators.expectations import route
+    from twitter_flink_spark.queries.quality import (
+        GATE_RULES,
+        gate_ledger_frame,
     )
 
-    rules = [
-        Rule("value_under_100", "value >= 100", "quarantine"),
-        Rule("no_error_type", "event_type <> 'error'", "quarantine"),
-        Rule("value_at_least_1", "value >= 1", "warn"),
-        Rule("user_present", "user_id IS NOT NULL", "drop"),
-    ]
     staged = _ensure_split_events(spark, sf_dir)
     schema = spark.read.parquet(staged).schema
     stream = (
@@ -1606,7 +1592,7 @@ def streaming_expectations_gate(
     batches = []
 
     def on_batch(batch_df, batch_id: int) -> None:
-        led, _ = route(batch_df, rules, f"{dest}/batch={batch_id}")
+        led, _ = route(batch_df, GATE_RULES, f"{dest}/batch={batch_id}")
         totals.update(led)
         batches.append(batch_id)
 
@@ -1619,27 +1605,8 @@ def streaming_expectations_gate(
         .start()
     )
     await_or_raise(q, 300)
-    on_disk = {
-        r[ROUTE_COL]: r["n"]
-        for r in spark.read.parquet(dest)
-        .groupBy(ROUTE_COL)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # <= 3 rows
-    }
-    matches = len(batches) > 1 and all(
-        totals[f"route_{v}"] == on_disk.get(v, 0)
-        for v in ("good", "quarantined", "dropped")
-    )
-    by_action = {r.name: r.action for r in rules}
-    rows = [
-        (k.removeprefix("rule_"), by_action[k.removeprefix("rule_")], n)
-        for k, n in totals.items()
-        if k.startswith("rule_")
-    ] + [(k, "route", n) for k, n in totals.items() if k.startswith("route_")]
-    return spark.createDataFrame(
-        [(r, a, int(n), bool(matches)) for r, a, n in rows],
-        "rule string, action string, n long, persisted_matches boolean",
-    )
+    # >1 batch: the run really was incremental
+    return gate_ledger_frame(spark, totals, dest, ok=len(batches) > 1)
 
 
 # oracle shared with the batch twin `hll_rolling_7day_actives` — the
@@ -1669,8 +1636,6 @@ def streaming_hll_actives_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. At-least-once replay safety comes from the family's
     batch-id manifest (a replayed batch never re-unions), pinned for
     this subclass in tests/test_streaming.py."""
-    import tempfile
-
     from twitter_flink_spark.streaming.pipeline import SketchMV
 
     staged = _ensure_split_events(spark, sf_dir)
@@ -1918,7 +1883,6 @@ def streaming_watermark_frontier(
     query pins what the watermark DOES, this one pins where it
     STANDS."""
     import datetime as _dt
-    import tempfile
 
     staged = _ensure_late_staged(spark, sf_dir)
     schema = spark.read.parquet(staged).schema
@@ -1959,7 +1923,7 @@ def streaming_watermark_frontier(
     rows = [
         (_dt.datetime.strptime(w, "%Y-%m-%dT%H:%M:%S.%fZ"),) for w in seen
     ]
-    return spark.createDataFrame(rows, "watermark timestamp")
+    return local_frame(spark, rows, "watermark timestamp")
 
 
 _SINK_IDX_DRAINED: dict = {}
@@ -1978,7 +1942,6 @@ def _drained_sink_indexes(
     per session instead of once per query. Returns
     (dest, flat_ledger, percolumn_ledger)."""
     import os
-    import tempfile
 
     from twitter_flink_spark.operators import skipping
 
@@ -2228,7 +2191,6 @@ def streaming_quarantine_repair(
     import datetime
     import json
     import os
-    import tempfile
 
     from pyspark.sql import Observation
 
@@ -2469,12 +2431,12 @@ def streaming_ivf_assign_maintenance(
     inverted-list append touches k dirs at most — no maintenance step
     ever scales with the table."""
     import os
-    import tempfile
 
     from twitter_flink_spark.operators.clustering import (
         assign_clusters,
         kmeans_fit,
     )
+    from twitter_flink_spark.operators.ivf import ivf_assign_append
     from twitter_flink_spark.queries.similarity import (
         _KM_ITERS,
         _KM_K,
@@ -2492,15 +2454,10 @@ def streaming_ivf_assign_maintenance(
     # the offline fit: corpus half, frozen to disk before the stream
     work = scratch_dir("ivfstream")
     corpus = spread(emb, "vec_id").where(F.col("vec_id") <= split)
-    from twitter_flink_spark.operators.clustering import (
-        checkpointed_write,
-    )
-
-    checkpointed_write(
-        kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
-            "cid", "cent"
-        ),
-        os.path.join(work, "_centroids"),
+    kmeans_fit(corpus, k=_KM_K, iters=_KM_ITERS).select(
+        "cid", "cent"
+    ).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(work, "_centroids")
     )
     cents = spark.read.parquet(os.path.join(work, "_centroids"))
     assign_dir = os.path.join(work, "_assign")
@@ -2508,28 +2465,11 @@ def streaming_ivf_assign_maintenance(
     ledger: list[int] = []
 
     def sink(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
         vecs = batch_df.select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("e"),
         )
-        if os.path.isdir(assign_dir):
-            known = spark.read.parquet(assign_dir).select("vec_id")
-            vecs = vecs.join(known, "vec_id", "left_anti")
-        fresh = assign_clusters(vecs, cents)
-        # the freshly-indexed count is OBSERVED during the append write:
-        # one job per micro-batch, and the window assignment evaluates
-        # ONCE (the previous count-then-write ran it twice — half the
-        # r15 regression on this query). A redelivered batch evaluates
-        # to zero rows and appends no files: still a pure no-op.
-        obs = Observation()
-        fresh.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "append"
-        ).partitionBy("cid").parquet(assign_dir)
-        from twitter_flink_spark.operators.dedup import _observed_count
-
-        ledger.append(_observed_count(obs))
+        ledger.append(ivf_assign_append(vecs, cents, assign_dir))
 
     schema = spark.read.parquet(staged).schema
     q = (
@@ -2667,7 +2607,6 @@ def streaming_lsh_index_maintenance(
     append is per-file renames, crash-safe by the all-bands-present
     coverage rule."""
     import os
-    import tempfile
 
     from twitter_flink_spark.operators.dedup import (
         jaccard_verify_sets,
@@ -2817,9 +2756,9 @@ def streaming_dedup_impact_ledger(
     curator's token-reduction number is fresh after every crawl
     instead of after a monthly re-census."""
     import os
-    import tempfile
 
     from twitter_flink_spark.operators.dedup import jaccard_verify_sets
+    from twitter_flink_spark.operators.ivf import has_parquet
     from twitter_flink_spark.queries.dedup import (
         _staged_minhash,
         _staged_shingle_sets,
@@ -2851,15 +2790,13 @@ def streaming_dedup_impact_ledger(
     def _cluster() -> DataFrame:
         # a zero-pair append writes no parquet files, so guard on actual
         # files (an empty dir has no schema to infer)
-        if os.path.isdir(pairs_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(pairs_dir)
-        ):
+        if has_parquet(pairs_dir):
             cl = _cluster_pairs_adaptive(
                 spark.read.parquet(pairs_dir).distinct(), pair_total[0]
             )
         else:
-            cl = spark.createDataFrame(
-                [], "doc_id long, cluster_id long"
+            cl = local_frame(
+                spark, [], "doc_id long, cluster_id long"
             )
         last_cluster[:] = [cl]
         return cl
@@ -3112,8 +3049,6 @@ def streaming_lsh_delete_maintenance(
     At 100 TB: each delete batch pays one semi-join + one appended
     parquet; nothing re-signs the surviving corpus; the compaction
     amortizes over many delete batches."""
-    import os
-
     from twitter_flink_spark.operators.dedup import (
         jaccard_verify_sets,
         lsh_index_candidates,

@@ -21,8 +21,10 @@ a plan that survives scale-up:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 #: Confs that are safe (and required) to set on an already-running session.
 RUNTIME_CONFS: dict[str, str] = {
@@ -85,3 +87,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return tune_session(spark)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` with exactly ``schema`` (a
+    ``StructType`` or DDL string) — the one constructor for driver-built
+    frames. The rows ship as an Arrow table and plan as a JVM
+    ``LocalTableScan`` (a JVM RDD above Spark's local-relation
+    threshold); ``createDataFrame(list)`` would pickle them into a
+    Python RDD whose every job pays for Python workers. Rows convert
+    through ``StructType.toInternal`` first, as on that path, so
+    timestamps and dates keep its semantics."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*(schema.toInternal(r) for r in rows))) or [
+        () for _ in schema.fields
+    ]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -36,6 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from twitter_flink_spark.session import local_frame
 from twitter_flink_spark.streaming.sources import stream_table
 
 
@@ -381,7 +382,6 @@ class TopNFeedback:
         ``.gc`` before the compacted one takes its place, and ``_restore``
         re-adopts a stranded ``.gc`` dir — at worst a crash costs one
         compaction, never the log."""
-        import os
         import shutil
 
         compacted = (
@@ -567,7 +567,7 @@ class TopNFeedback:
         if os.path.isdir(self._out_dir):
             return self.spark.read.parquet(self._out_dir)
         schema = "event_id long, " + self.key_col + " string, user_id long"
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, [], schema)
 
 
 class IncrementalMV:
@@ -730,8 +730,6 @@ class IncrementalMV:
     def merge_batch(self, batch_df, batch_id: int) -> None:
         import os
         import shutil
-
-        from pyspark.sql import functions as F
 
         if self._last_batch_id is not None and batch_id <= self._last_batch_id:
             return  # replayed micro-batch (at-least-once) — already merged
@@ -1013,7 +1011,6 @@ class IncrementalMV:
         there is no basis to call any range safe; a registry whose
         slowest consumer has applied nothing (offset -1) makes the call
         a no-op instead of rewriting the log for an empty range."""
-        import os
         import shutil
 
         from pyspark.sql import functions as F
@@ -1091,8 +1088,8 @@ class IncrementalMV:
                 f"lookup keys must have {len(join_cols)} element(s) "
                 f"({join_cols}); got {len(rows[0])}"
             )
-        key_df = self.spark.createDataFrame(
-            rows, self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
+        key_df = local_frame(
+            self.spark, rows, self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
         )
         wanted = {
             r["b"]
@@ -1106,10 +1103,7 @@ class IncrementalMV:
             if b in wanted
         ]
         if not dirs:
-            key_schema = self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
-            return self.spark.createDataFrame(
-                [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
-            )
+            return self._empty()
         return self.spark.read.parquet(*dirs).join(
             F.broadcast(key_df), join_cols
         )
@@ -1150,10 +1144,7 @@ class IncrementalMV:
             if m["last_batch_id"] <= batch_id:
                 chosen = m  # manifests sort oldest-first; keep the latest
         if chosen is None:
-            key_schema = self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
-            return self.spark.createDataFrame(
-                [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
-            )
+            return self._empty()
         dirs = [
             self._bucket_dir(int(b), v)
             for b, v in chosen["buckets"].items()
@@ -1163,13 +1154,17 @@ class IncrementalMV:
     #: overridden where the key is composite or non-long
     _EMPTY_KEY_SCHEMA: str | None = None
 
+    def _empty(self) -> DataFrame:
+        """Zero-row frame with the snapshot's schema."""
+        key_schema = self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
+        return local_frame(
+            self.spark, [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
+        )
+
     def snapshot(self):
         dirs = [self._bucket_dir(b, v) for b, v in self._buckets.items()]
         if not dirs:
-            key_schema = self._EMPTY_KEY_SCHEMA or f"{self.key_col} long"
-            return self.spark.createDataFrame(
-                [], f"{key_schema}, {self._EMPTY_VALUE_SCHEMA}"
-            )
+            return self._empty()
         return self.spark.read.parquet(*dirs)
 
 
