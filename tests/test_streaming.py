@@ -9,6 +9,7 @@ import datetime
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from twitter_flink_spark.operators.windows import sliding_window_counts
 from twitter_flink_spark.sources.tables import load_table
@@ -269,7 +270,6 @@ def _split_events(spark, dest, n_chunks=4):
     """Write the events table as n time-contiguous parquet files with
     strictly increasing mtimes (the file source batches in mtime order)."""
     import os
-    import shutil
     import time
 
     from pyspark.sql import Window
@@ -282,24 +282,29 @@ def _split_events(spark, dest, n_chunks=4):
     out = []
     for i in range(n_chunks):
         lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
-        stage = f"{dest}-stage{i}"
-        (
-            idx.where((F.col("_i") > lo) & (F.col("_i") <= hi))
-            .drop("_i")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
+        out.append(
+            _write_one_file(
+                idx.where((F.col("_i") > lo) & (F.col("_i") <= hi)).drop("_i"),
+                os.path.join(dest, f"{i:02d}.parquet"),
+                time.time() - (n_chunks - i) * 10,
+            )
         )
-        part = next(
-            f for f in os.listdir(stage) if f.endswith(".parquet")
-        )
-        target = os.path.join(dest, f"{i:02d}.parquet")
-        shutil.move(os.path.join(stage, part), target)
-        shutil.rmtree(stage)
-        t = time.time() - (n_chunks - i) * 10
-        os.utime(target, (t, t))
-        out.append(target)
     return out
+
+
+def _write_one_file(df, target, mtime):
+    """Write ``df`` as the single parquet file ``target`` with the given
+    mtime (the file source batches in mtime order)."""
+    import os
+    import shutil
+
+    stage = f"{target}-stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    shutil.move(os.path.join(stage, part), target)
+    shutil.rmtree(stage)
+    os.utime(target, (mtime, mtime))
+    return target
 
 
 def test_feedback_checkpoint_restart(spark, tmp_path):
@@ -481,6 +486,254 @@ def test_feedback_log_compacts_in_run(spark, tmp_path):
         src_path=grow, checkpoint_dir=ck, max_files_per_trigger=1,
     )
     assert fb2.snapshot == fb1.snapshot
+
+
+def test_feedback_filter_reads_src_path(spark, tmp_path):
+    """`run_filter` streams the leaderboard's own source: with a `src_path`
+    whose events differ from the `sf_dir` table (ids shifted), the filter
+    returns exactly src_path's events of the snapshot keys."""
+    src = str(tmp_path / "shifted")
+    load_table(spark, SF_DIR, "events").withColumn(
+        "event_id", F.col("event_id") + 10**9
+    ).write.parquet(src)
+    fb = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=3, src_path=src,
+        max_files_per_trigger=1,
+    )
+    fb.run_leaderboard()
+    assert fb.snapshot
+
+    got = sorted(tuple(r) for r in fb.run_filter().collect())
+    expected = sorted(
+        tuple(r)
+        for r in spark.read.parquet(src)
+        .where(F.col("event_type").isin(*fb.snapshot))
+        .select("event_id", "event_type", "user_id")
+        .collect()
+    )
+    assert got and got == expected
+
+
+class _BatchListener(StreamingQueryListener):
+    """Records per-batch progress and which runs started and terminated
+    (listener events arrive asynchronously)."""
+
+    def __init__(self):
+        self.started, self.terminated, self.progress = [], [], []
+
+    def onQueryStarted(self, event):
+        self.started.append(str(event.runId))
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        ops = p.stateOperators
+        self.progress.append({
+            "run_id": str(p.runId),
+            "batch_id": p.batchId,
+            "input_rows": p.numInputRows,
+            "state_rows": sum(o.numRowsTotal for o in ops),
+            "dropped": sum(o.numRowsDroppedByWatermark for o in ops),
+        })
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.terminated.append(str(event.runId))
+
+    def wait_terminated(self, n, timeout_s=60):
+        import time
+
+        deadline = time.time() + timeout_s
+        while len(self.terminated) < n:
+            assert time.time() < deadline, "listener events missing"
+            time.sleep(0.1)
+
+    def batches(self, run_id):
+        return sorted(
+            (p for p in self.progress if p["run_id"] == run_id),
+            key=lambda p: p["batch_id"],
+        )
+
+
+def _late_copy(spark, src_file, target):
+    """One file of ``src_file``'s events moved a day back in event time,
+    newest by mtime: every event is behind any watermark the other files
+    set."""
+    import time
+
+    late = spark.read.parquet(src_file).withColumn(
+        "ts", F.col("ts") - F.expr("INTERVAL 1 DAY")
+    )
+    return _write_one_file(late, target, time.time())
+
+
+def test_feedback_one_stateful_evaluation_per_batch(spark, tmp_path):
+    """Every action on a foreachBatch frame runs the state-store stage again
+    and counts its metrics again, so the leaderboard body must evaluate the
+    stateful plan once per micro-batch: its per-batch state metrics equal a
+    plain update-mode run over the same files, and its job group holds at
+    most two jobs per data batch (the cut's collect and the WAL write from
+    the cached cut) plus one per no-data batch."""
+    full = str(tmp_path / "full")
+    files = _split_events(spark, full, n_chunks=3)
+    _late_copy(spark, files[0], str(tmp_path / "full" / "03.parquet"))
+
+    lis = _BatchListener()
+    spark.streams.addListener(lis)
+    try:
+        fb = TopNFeedback(
+            spark, SF_DIR, key_col="event_type", n=3, src_path=full,
+            checkpoint_dir=str(tmp_path / "ck"), max_files_per_trigger=1,
+        )
+        fb.run_leaderboard()
+        src = (
+            spark.readStream.schema(spark.read.parquet(full).schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(full)
+        )
+        run_to_memory(
+            windowed_stream_counts(
+                src, key_cols=("event_type",), with_max_ts=True
+            ),
+            "update",
+            state_partitions=8,
+        )
+        lis.wait_terminated(2)
+    finally:
+        spark.streams.removeListener(lis)
+
+    board_run, plain_run = lis.started
+    board, plain = lis.batches(board_run), lis.batches(plain_run)
+    metrics = ("batch_id", "input_rows", "state_rows", "dropped")
+    assert [tuple(p[m] for m in metrics) for p in board] == [
+        tuple(p[m] for m in metrics) for p in plain
+    ]
+    assert sum(p["dropped"] for p in board) > 0  # the late file was dropped
+
+    n_data = sum(1 for p in board if p["input_rows"] > 0)
+    n_empty = len(board) - n_data
+    assert n_data == 4
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(board_run)
+    assert 0 < len(jobs) <= 2 * n_data + n_empty
+
+
+def test_feedback_wal_carries_batch_frontier(spark, tmp_path):
+    """Each batch's latest event belongs to a key the top-n cut drops, so
+    only the batch frontier (not any kept row's own max) knows the true
+    event time. Every WAL row must carry its batch's max(ts), one WAL file
+    per batch, and a restore from that log must reproduce the
+    uninterrupted run's snapshot and KV."""
+    import os
+    import time
+
+    base = datetime.datetime(2024, 1, 1, 12, 0, 0)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    n_files = 7
+    for minute in range(n_files):
+        t0 = base + datetime.timedelta(minutes=minute)
+        rows = [
+            (minute * 100 + i, key, i, t0 + datetime.timedelta(seconds=i))
+            for i, key in enumerate(["a"] * 5 + ["b"] * 4)
+        ]
+        # z: 1 event per minute, always cut at n=2, always the latest event
+        rows.append((minute * 100 + 99, "z", 99, t0 + datetime.timedelta(seconds=59)))
+        _write_one_file(
+            spark.createDataFrame(
+                rows, "event_id long, event_type string, user_id long, ts timestamp"
+            ),
+            os.path.join(src, f"{minute:02d}.parquet"),
+            time.time() - (n_files - minute) * 10,
+        )
+    ck = str(tmp_path / "ck")
+    fb1 = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=2, src_path=src,
+        checkpoint_dir=ck, max_files_per_trigger=1, compact_every=None,
+    )
+    fb1.run_leaderboard()
+    assert fb1.snapshot == ["a", "b"]
+
+    frontiers = sorted(
+        spark.read.parquet(os.path.join(src, f)).agg(F.max("ts")).collect()[0][0]
+        for f in sorted(os.listdir(src))
+    )
+    log_dir = ck + "/counts_log"
+    parts = [f for f in os.listdir(log_dir) if f.startswith("part-")]
+    logged = []
+    for part in parts:
+        df = spark.read.parquet(os.path.join(log_dir, part))
+        assert df.where(F.col("event_type") == "z").count() == 0
+        stamps = {r[0] for r in df.select("max_ts").distinct().collect()}
+        assert len(stamps) == 1  # one file per batch, stamped with its frontier
+        logged += stamps
+    assert sorted(logged) == frontiers
+
+    fb2 = TopNFeedback(
+        spark, SF_DIR, key_col="event_type", n=2, src_path=src,
+        checkpoint_dir=ck, max_files_per_trigger=1, compact_every=None,
+    )
+    assert fb2._max_ts == frontiers[-1]
+    assert fb2.snapshot == fb1.snapshot
+    assert fb2.kv.data == fb1.kv.data
+
+
+def test_feedback_empty_batches_leave_state_unchanged(spark, tmp_path):
+    """The trailing no-data batch and a batch whose every event is behind
+    the watermark both hand foreachBatch an empty frame: neither may raise,
+    and neither may touch the mirror, the WAL or the KV store."""
+    import copy
+    import os
+    import shutil
+
+    class Recording(TopNFeedback):
+        def __post_init__(self):
+            super().__post_init__()
+            self.calls = []
+
+        def _state(self):
+            wal = (
+                sorted(os.listdir(self._log_dir))
+                if os.path.isdir(self._log_dir) else []
+            )
+            return (
+                copy.deepcopy(self._top), dict(self._wend), self._max_ts,
+                list(self.snapshot), dict(self.kv.data), wal,
+            )
+
+        def _update_leaderboard(self, batch_df, batch_id):
+            before = self._state()
+            super()._update_leaderboard(batch_df, batch_id)
+            self.calls.append((batch_id, before, self._state()))
+
+    full = str(tmp_path / "full")
+    files = _split_events(spark, full, n_chunks=2)
+    grow = str(tmp_path / "grow")
+    os.makedirs(grow)
+    for f in files:
+        shutil.copy2(f, grow)
+    lis = _BatchListener()
+    spark.streams.addListener(lis)
+    try:
+        fb = Recording(
+            spark, SF_DIR, key_col="event_type", n=3, src_path=grow,
+            checkpoint_dir=str(tmp_path / "ck"), max_files_per_trigger=1,
+        )
+        fb.run_leaderboard()  # two data batches, then the no-data batch
+        _late_copy(spark, files[0], os.path.join(grow, "02.parquet"))
+        fb.run_leaderboard()  # resumes from the checkpoint: the late file
+        lis.wait_terminated(2)
+    finally:
+        spark.streams.removeListener(lis)
+
+    progress = lis.batches(lis.started[0]) + lis.batches(lis.started[1])
+    assert [p["input_rows"] > 0 for p in progress] == [True, True, False, True]
+    assert progress[3]["dropped"] > 0
+    assert [c[0] for c in fb.calls] == [p["batch_id"] for p in progress]
+    assert fb.snapshot and fb._log_dir and os.listdir(fb._log_dir)
+    for batch_id, before, after in fb.calls[2:]:
+        assert after == before, f"empty batch {batch_id} changed state"
+    assert fb.calls[1][1] != fb.calls[1][2]  # a data batch does change it
 
 
 # ---------------------------------------------------------------------------

@@ -241,6 +241,7 @@ class TopNFeedback:
     #: {checkpoint_dir}/counts_log so a restarted process recovers the
     #: snapshot the reference loses (`TopNHashtags.java:303`)
     checkpoint_dir: str | None = None
+    #: files per leaderboard micro-batch; the filter drains in one batch
     max_files_per_trigger: int | None = None
     #: compact the counts WAL in-run every this many micro-batches (None
     #: disables): a long-running job's log then stays O(live windows x n)
@@ -419,40 +420,51 @@ class TopNFeedback:
 
     def _update_leaderboard(self, batch_df: DataFrame, batch_id: int) -> None:
         record_batch_df_plan(f"leaderboard-b{batch_id}", batch_df)
+        from pyspark.sql import Observation
+
         from twitter_flink_spark.operators.topn import topn_per_group
 
-        # The driver only ever sees <= (windows-in-batch x n) rows: the
-        # event-time frontier is a 1-row distributed max, and the update-mode
-        # deltas are cut to the per-window top-N BEFORE collect (row_number
-        # over (window_start) → WindowGroupLimit: per-partition heaps ship at
-        # most n rows per window to the rank shuffle). The cut is lossless
-        # for monotone counts — see `_merge`. This is the reference's own
-        # bound: its broadcast carries exactly N rows
-        # (`TopNHashtags.java:131,284-288`).
-        frontier = batch_df.agg(F.max("max_ts")).collect()[0][0]
-        if frontier is None:  # empty micro-batch
-            return
+        # `batch_df` is a LogicalRDD over the micro-batch's stateful RDD, so
+        # EVERY action on it runs the state-store stage again: load, update
+        # and commit of all state partitions, with the state metrics counted
+        # once more. The body therefore runs the stateful plan in exactly one
+        # job. That job collects the update-mode deltas cut to the per-window
+        # top-N (row_number over window_start → WindowGroupLimit: per-
+        # partition heaps ship at most n rows per window to the rank
+        # shuffle), and an Observation beneath the cut carries the event-time
+        # frontier out of the same pass. The cut is lossless for monotone
+        # counts — see `_merge` — and the driver sees <= (windows-in-batch x
+        # n) rows plus the frontier, the reference's own bound: its broadcast
+        # carries exactly N rows (`TopNHashtags.java:131,284-288`).
+        obs = Observation()
         cut = topn_per_group(
-            batch_df, ("window_start",), "cnt", (self.key_col,), n=self.n
+            batch_df.observe(obs, F.max("max_ts").alias("frontier")),
+            ("window_start",), "cnt", (self.key_col,), n=self.n,
         ).drop("rank")
         if self._log_dir:
-            # Persist so the WAL write and the mirror collect share one
-            # evaluation of the rank cut (no second pass over the batch, no
-            # driver round-trip rebuilding the cut row-by-row).
+            # the WAL write below reads this cache, not the state store
             cut = cut.persist()
         try:
+            rows = cut.collect()
+            # Empty micro-batch (the trailing no-data batch, or one whose
+            # every event is behind the watermark): return before `obs.get`,
+            # because AQE's empty-relation propagation can leave a null
+            # metrics row (see `operators/dedup.py::_observed_count`).
+            if not rows:
+                return
+            frontier = obs.get["frontier"]
             if self._log_dir:
                 # write-ahead: log the cut (not the full delta) before
                 # mutating the mirror, so a crash between the two replays the
                 # batch (at-least-once) and _restore's max(cnt) dedups.
                 # max_ts is rewritten to the BATCH frontier: the per-row max
                 # could sit on a cut-away row, and _restore needs the true
-                # watermark. The cut is written DISTRIBUTED, straight from
-                # the executors — column order pinned to the batch schema.
+                # watermark. One file per batch, written from the cached cut
+                # (the state stage shows as skipped), column order pinned to
+                # the batch schema.
                 cut.withColumn("max_ts", F.lit(frontier)).select(
                     *[f.name for f in batch_df.schema.fields]
-                ).write.mode("append").parquet(self._log_dir)
-            rows = cut.collect()
+                ).coalesce(1).write.mode("append").parquet(self._log_dir)
         finally:
             if self._log_dir:
                 cut.unpersist()
@@ -499,22 +511,24 @@ class TopNFeedback:
             del self._top[ws]
             del self._wend[ws]
 
-    def _source(self) -> DataFrame:
+    def _source(self, max_files_per_trigger: int | None = None) -> DataFrame:
+        """The event stream both queries read: ``src_path`` when set, else
+        the ``sf_dir`` events table."""
         if self.src_path is not None:
             schema = self.spark.read.parquet(self.src_path).schema
             reader = self.spark.readStream.schema(schema)
-            if self.max_files_per_trigger is not None:
+            if max_files_per_trigger is not None:
                 reader = reader.option(
-                    "maxFilesPerTrigger", str(self.max_files_per_trigger)
+                    "maxFilesPerTrigger", str(max_files_per_trigger)
                 )
             return reader.parquet(self.src_path)
         return stream_table(
             self.spark, self.sf_dir, "events",
-            max_files_per_trigger=self.max_files_per_trigger,
+            max_files_per_trigger=max_files_per_trigger,
         )
 
     def run_leaderboard(self, timeout_s: int = 300) -> None:
-        src = self._source()
+        src = self._source(self.max_files_per_trigger)
         agg = windowed_stream_counts(
             src, key_cols=(self.key_col,), with_max_ts=True,
             watermark=f"{self.watermark_s} second",
@@ -554,7 +568,9 @@ class TopNFeedback:
         ).parquet(self._out_dir)
 
     def run_filter(self, timeout_s: int = 300) -> DataFrame:
-        src = stream_table(self.spark, self.sf_dir, "events")
+        # the leaderboard's source, drained in one batch: the file cap only
+        # paces the leaderboard's micro-batches
+        src = self._source()
         q = (
             src.writeStream.outputMode("append")
             .foreachBatch(self._filter_batch)
